@@ -11,17 +11,13 @@ Spark decomposition:
 - cache upsert (J4)        -> unionByName + keep-last row_number dedup
 - enrichment join (J1/P16) -> BROADCAST left join + country->countryName
 
-Why the DEFAULT fetch is driver-side: the public API allows ~1.4 req/s
-(reference :242), so the fetch loop is latency-bound no matter where it
-runs. For a LARGE uncached set the opt-in executor-side path
-(`uncached_ips_frame` -> `fetch_geolocations_distributed` ->
-`upsert_cache_frame`, wired via `enrich_with_geolocation`'s
-``transport_factory``) keeps the whole miss->fetch->upsert pipeline as
-DataFrames — no driver materialization, same injectable transport, same
-deterministic cap, single-partition global rate limit by default (raise
-``num_partitions`` only for keyed/paid API tiers). At 100 TB a live HTTP
-fetch is the wrong tool regardless — swap the cache for a licensed
-offline geo dataset and `enrich` is already just a broadcast dim join.
+Why the fetch is driver-side: the public API allows ~1.4 req/s as a
+GLOBAL budget (reference :242), so the fetch loop is latency-bound no
+matter where it runs — an executor task spacing requests the same way
+fetches no faster — and the miss list reaching the driver is capped in
+the plan at ``MAX_UNCACHED_IPS``. At 100 TB a live HTTP fetch is the
+wrong tool regardless — swap the cache for a licensed offline geo dataset
+and `enrich` is already just a broadcast dim join.
 Tests never touch the network (transport is injected).
 """
 
@@ -160,8 +156,7 @@ def _fetch_one(
     max_retries: int,
     sleep: Callable[[float], None],
 ) -> dict:
-    """One IP through the capped-retry etiquette — shared by the driver-side
-    loop and the executor-side mapInPandas variant."""
+    """One IP through the capped-retry etiquette."""
     data: dict | None = None
     for attempt in range(max_retries + 1):
         try:
@@ -200,100 +195,6 @@ def fetch_geolocations(
     return rows
 
 
-def uncached_ips_frame(
-    logs: DataFrame,
-    cache: DataFrame,
-    ip_col: str = "client_ip",
-    max_ips: int | None = MAX_UNCACHED_IPS,
-) -> DataFrame:
-    """The distributed twin of find_uncached_ips: the same distinct ->
-    broadcast-anti-join -> deterministic sort-order cap plan, but the
-    result STAYS a DataFrame (column ``ip``) — nothing is collected, so
-    an arbitrarily large miss set never touches the driver.  Cap
-    semantics are identical: at most ``max_ips`` rows, first in sort
-    order (stable backlog drain), and — matching the module contract the
-    driver twin honors — truncation is logged loudly, never silent: one
-    small eager job probes for a ``max_ips + 1``-th miss (plan-side
-    limit, so the probe moves at most ``max_ips + 1`` rows) and warns
-    when the backlog exceeds the cap.  ``max_ips=None`` removes both the
-    guard and the probe."""
-    distinct_ips = (
-        logs.select(F.col(ip_col).alias("ip")).filter(F.col("ip").isNotNull()).distinct()
-    )
-    missing = distinct_ips.join(
-        F.broadcast(cache.select("query")), distinct_ips.ip == F.col("query"), "left_anti"
-    )
-    if max_ips is None:
-        return missing
-    if missing.limit(max_ips + 1).count() > max_ips:
-        _logger.warning(
-            "uncached_ips_frame: more than %d uncached IPs; the distributed "
-            "fetch will cover the first %d in sort order (the rest remain "
-            "un-enriched this run — raise max_ips or re-run to drain the "
-            "backlog)",
-            max_ips,
-            max_ips,
-        )
-    return missing.orderBy("ip").limit(max_ips)
-
-
-def fetch_geolocations_distributed(
-    missing: DataFrame,
-    transport_factory: Callable[[], Transport],
-    inter_request_delay_s: float = 0.7,
-    retry_backoff_s: float = 1.0,
-    max_retries: int = 5,
-    num_partitions: int = 1,
-) -> DataFrame:
-    """Executor-side rate-limited fetch (the 100 TB path for a LARGE
-    uncached IP set, SURVEY §2 S6): the miss frame is repartitioned to
-    ``num_partitions`` and each partition runs the same capped-retry
-    etiquette as the driver loop via Arrow-batched mapInPandas — the
-    driver never materializes the IP list, and fetched rows flow straight
-    into the cache upsert join as a DataFrame.
-
-    ``transport_factory`` (not a transport) because the callable crosses
-    the serialization boundary: each task constructs its own transport —
-    same injectable contract as the driver path, so tests stay hermetic.
-
-    Rate-limit bookkeeping: the public-API etiquette (ip-api.com's ~1.4
-    req/s, reference :242) is a GLOBAL budget, so the default is ONE
-    partition — a single executor task spaces requests exactly like the
-    driver loop, but off the driver and restartable with the stage.  Raise
-    ``num_partitions`` only for keyed/paid tiers whose quota is per-token:
-    the delay then applies per partition and aggregate rate multiplies.
-
-    Output: one row per input IP with the GEO_CACHE_SCHEMA columns minus
-    api_fetch_timestamp (upsert_cache_frame stamps it)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    out_schema = T.StructType(GEO_CACHE_SCHEMA.fields[:-1])
-    field_names = [f.name for f in out_schema.fields]
-
-    def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = transport_factory()
-        first = True
-        for batch in batches:
-            rows = []
-            for ip in batch["ip"]:
-                if not first:
-                    _time.sleep(inter_request_delay_s)
-                first = False
-                data = _fetch_one(
-                    ip, transport, retry_backoff_s, max_retries, _time.sleep
-                )
-                # _cell: ip-api returns country-level coords as JSON ints;
-                # coerce so Arrow's double columns never see object/int mix
-                rows.append(tuple(_cell(data, f) for f in out_schema.fields))
-            yield pd.DataFrame(rows, columns=field_names)
-
-    return missing.repartition(num_partitions).mapInPandas(
-        fetch_partition, schema=out_schema
-    )
-
-
 def _cell(row: dict, field: T.StructField):
     v = row.get(field.name)
     # ip-api returns country-level coords as JSON integers (lat: 35);
@@ -309,28 +210,13 @@ def upsert_cache(spark: SparkSession, cache: DataFrame, new_rows: list[dict]) ->
     fetch timestamp here (reference stamps at :183)."""
     if not new_rows:
         return cache
-    now = F.current_timestamp()
     fresh = spark.createDataFrame(
         [
             tuple(_cell(r, f) for f in GEO_CACHE_SCHEMA.fields[:-1])
             for r in new_rows
         ],
         T.StructType(GEO_CACHE_SCHEMA.fields[:-1]),
-    ).withColumn("api_fetch_timestamp", now)
-    return _keep_last(cache, fresh)
-
-
-def upsert_cache_frame(cache: DataFrame, fresh: DataFrame) -> DataFrame:
-    """DataFrame-in upsert for the executor-side fetch path: ``fresh`` is
-    fetch_geolocations_distributed's output (GEO_CACHE_SCHEMA minus the
-    timestamp, stamped here) — nothing is materialized on the driver
-    between miss detection and the written cache."""
-    return _keep_last(
-        cache, fresh.withColumn("api_fetch_timestamp", F.current_timestamp())
-    )
-
-
-def _keep_last(cache: DataFrame, fresh: DataFrame) -> DataFrame:
+    ).withColumn("api_fetch_timestamp", F.current_timestamp())
     # keep-last: fresh rows outrank cache rows; remaining ties (duplicate
     # rows inside an old cache file with equal timestamps) break on a row
     # content hash so the winner is deterministic across runs.
@@ -364,32 +250,14 @@ def enrich_with_geolocation(
     cache_path: str,
     transport: Transport | None = None,
     inter_request_delay_s: float = 0.7,
-    transport_factory: Callable[[], Transport] | None = None,
     max_ips: int | None = MAX_UNCACHED_IPS,
 ) -> DataFrame:
     """The full reference flow (:231-265): load cache -> find misses ->
     (optional) fetch + upsert + persist -> broadcast join. With no
     transport, run cache-only (hermetic/offline mode — misses simply stay
-    un-enriched, matching the reference's degrade-and-continue stance).
-
-    Opt-in executor-side fetch: pass ``transport_factory`` INSTEAD of
-    ``transport`` and the miss set never touches the driver — the same
-    cap-in-plan miss frame feeds fetch_geolocations_distributed and
-    upsert_cache_frame end-to-end as DataFrames (the 100 TB shape for a
-    large cold cache).  Passing both is a contradiction and raises."""
-    if transport is not None and transport_factory is not None:
-        raise ValueError("pass transport (driver-side) OR transport_factory "
-                         "(executor-side), not both")
+    un-enriched, matching the reference's degrade-and-continue stance)."""
     cache = load_geo_cache(spark, cache_path)
-    if transport_factory is not None:
-        missing_df = uncached_ips_frame(logs, cache, ip_col="client_ip", max_ips=max_ips)
-        fresh = fetch_geolocations_distributed(
-            missing_df, transport_factory, inter_request_delay_s=inter_request_delay_s
-        )
-        cache = upsert_cache_frame(cache, fresh)
-        write_cache(cache, cache_path)
-        cache = load_geo_cache(spark, cache_path)
-    elif transport is not None:
+    if transport is not None:
         missing = find_uncached_ips(logs, cache, ip_col="client_ip", max_ips=max_ips)
         if missing:
             rows = fetch_geolocations(

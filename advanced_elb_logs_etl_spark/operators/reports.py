@@ -46,19 +46,22 @@ def stringify_time_eastern(ts: Column | str, tz: str = EASTERN_TZ) -> Column:
     return F.concat(F.date_format(wall, "yyyy-MM-dd HH:mm:ss"), sign, hh, mm)
 
 
-def hourly_aggregation(df: DataFrame, exact: bool = True) -> DataFrame:
-    """A1-A6 battery (reference write_hourly_aggregation :345-363): 6 group
-    keys, 9 aggregates. pandas groupby drops null group keys — replicated
-    with an explicit filter (SURVEY.md §2.5).
+def geo_located(df: DataFrame) -> DataFrame:
+    """Rows the hourly report groups: pandas groupby drops null group keys
+    — replicated with an explicit filter (SURVEY.md §2.5)."""
+    return df.filter(F.col("countryName").isNotNull() & F.col("city").isNotNull())
+
+
+def hourly_metrics(exact: bool) -> list[Column]:
+    """The nine hourly aggregates (A1-A6, reference :345-363), shared by the
+    batch report and its streaming twin.
 
     exact=False swaps countDistinct/median for approx_count_distinct/
     approx_percentile — the 100 TB toggle: both exact forms force extra
     shuffle passes (distinct expansion; full sort per group for median),
-    the approx forms are single-pass sketches.
+    the approx forms are single-pass sketches (and the only forms a
+    stream can maintain with bounded state).
     """
-    keys = ["request_year", "request_month", "request_day", "request_hour",
-            "countryName", "city"]
-    filtered = df.filter(F.col("countryName").isNotNull() & F.col("city").isNotNull())
     uniq = (
         F.countDistinct("client_ip") if exact
         else F.approx_count_distinct("client_ip")
@@ -67,7 +70,7 @@ def hourly_aggregation(df: DataFrame, exact: bool = True) -> DataFrame:
         F.median("total_processing_time_ms") if exact
         else F.percentile_approx("total_processing_time_ms", 0.5)
     ).alias("median_total_processing_time")
-    return filtered.groupBy(*keys).agg(
+    return [
         F.count("client_ip").alias("request_count"),
         uniq,
         F.avg("total_processing_time_ms").alias("average_total_processing_time"),
@@ -78,7 +81,15 @@ def hourly_aggregation(df: DataFrame, exact: bool = True) -> DataFrame:
         F.count_if(F.col("status_code_type") == "2xx_Success").alias("count_2xx"),
         F.count_if(F.col("status_code_type") == "4xx_ClientError").alias("count_4xx"),
         F.count_if(F.col("status_code_type") == "5xx_ServerError").alias("count_5xx"),
-    )
+    ]
+
+
+def hourly_aggregation(df: DataFrame, exact: bool = True) -> DataFrame:
+    """A1-A6 battery (reference write_hourly_aggregation :345-363): 6
+    Eastern date-part/geo group keys, the nine ``hourly_metrics``."""
+    keys = ["request_year", "request_month", "request_day", "request_hour",
+            "countryName", "city"]
+    return geo_located(df).groupBy(*keys).agg(*hourly_metrics(exact))
 
 
 def error_report(df: DataFrame) -> DataFrame:

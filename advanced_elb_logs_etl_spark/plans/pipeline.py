@@ -13,9 +13,8 @@ before the join) — identical to the reference's control flow (:422).
 
 Caching stance: the parsed+enriched+featured frame feeds four sinks, so
 ``run_pipeline`` persists it once (MEMORY_AND_DISK) before fan-out —
-otherwise each sink would re-parse the raw text. At 100 TB replace with a
-checkpoint to parquet (cheaper than 4x re-parse, resilient to executor
-loss); the `materialize=` knob chooses.
+otherwise each sink would re-parse the raw text — and releases it when the
+writes end, whether they succeed or not.
 """
 
 from __future__ import annotations
@@ -66,7 +65,6 @@ class PipelineConfig:
     output_dir: str = "output"
     geo_cache_path: str = "output/ip_geolocation_cache.parquet"
     exact_aggregates: bool = True
-    materialize: str = "persist"  # "persist" | "checkpoint_dir:<path>" | "none"
 
     @classmethod
     def from_env(cls) -> "PipelineConfig":
@@ -199,15 +197,9 @@ def run_pipeline(
 ) -> dict[str, str]:
     """Execute the four sinks (reference :428-438). Returns output paths."""
     autosize_for_inputs(spark, config.input_paths)
-    final = build_final_frame(spark, config.input_paths, config.geo_cache_path, transport)
-
-    if config.materialize == "persist":
-        final = final.persist(StorageLevel.MEMORY_AND_DISK)
-    elif config.materialize.startswith("checkpoint_dir:"):
-        ckpt = config.materialize.split(":", 1)[1]
-        final.write.mode("overwrite").parquet(ckpt)
-        final = spark.read.parquet(ckpt)
-
+    final = build_final_frame(
+        spark, config.input_paths, config.geo_cache_path, transport
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     out = config.output_dir
     paths = {
         "cleaned_logs": os.path.join(out, "cleaned_logs"),
@@ -216,11 +208,11 @@ def run_pipeline(
         "bot_details": os.path.join(out, "reports", "bot_traffic_details"),
         "bot_summary": os.path.join(out, "reports", "bot_traffic_by_origin_summary"),
     }
-    write_cleaned_logs(final, paths["cleaned_logs"])
-    write_hourly_aggregation(final, paths["hourly_agg"], exact=config.exact_aggregates)
-    write_error_report(final, paths["error_report"])
-    write_bot_traffic_reports(final, paths["bot_details"], paths["bot_summary"])
-
-    if config.materialize == "persist":
+    try:
+        write_cleaned_logs(final, paths["cleaned_logs"])
+        write_hourly_aggregation(final, paths["hourly_agg"], exact=config.exact_aggregates)
+        write_error_report(final, paths["error_report"])
+        write_bot_traffic_reports(final, paths["bot_details"], paths["bot_summary"])
+    finally:
         final.unpersist()
     return paths

@@ -7,9 +7,13 @@ Streaming unchanged — the same code object serves batch and streaming. Only
 the session/rolling operators need the dedicated streaming forms in
 streaming/sessions.py (they are stateful).
 
+The scan is the batch scan's streaming form (sources/elb.py) and the hourly
+metrics are the batch report's (operators/reports.py); only the group key
+and the watermark are stream-specific here.
+
 At scale this is the ALB delivery pattern: the load balancer drops a gz
-object every 5 minutes per AZ; maxFilesPerTrigger bounds per-batch work and
-the checkpoint directory gives exactly-once sink semantics.
+object every 5 minutes per AZ; a fixed maxFilesPerTrigger bounds per-batch
+work and the checkpoint directory gives exactly-once sink semantics.
 """
 
 from __future__ import annotations
@@ -19,82 +23,36 @@ from pyspark.sql import functions as F
 
 from ..operators.features import add_features
 from ..operators.parse import parse_alb_lines
-from ..session import apply_runtime_confs
+from ..operators.reports import geo_located, hourly_metrics
+from ..sources.elb import read_alb_stream
 
 
-def read_alb_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int = 16,
-    source_col: str = "log_source_file",
-    ignore_corrupt_files: bool = True,
-) -> DataFrame:
-    """Streaming scan of ALB .gz drops in a directory (S1-S4, incremental).
-
-    ignore_corrupt_files: the streaming file source does NOT honor the
-    per-reader ignoreCorruptFiles option (verified: a truncated gz kills the
-    query); only the SESSION conf applies, so enabling this changes the
-    whole session's behavior (corrupt files in other reads are skipped too).
-    Default True for reference parity (:169-171 skip-and-continue); pass
-    False if the session must keep fail-fast semantics elsewhere."""
-    apply_runtime_confs(spark)
-    if ignore_corrupt_files:
-        spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
-    return (
-        spark.readStream.option("pathGlobFilter", "*.gz")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .text(path)
-        .withColumn(source_col, F.input_file_name())
-    )
-
-
-def parse_alb_stream(
-    spark: SparkSession,
-    path: str,
-    eastern: bool = True,
-    ignore_corrupt_files: bool = True,
-) -> DataFrame:
+def parse_alb_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming parsed+featured frame: exactly the batch operators applied
     to a streaming source. Attach a writeStream sink (parquet + checkpoint
     in production; memory in tests) to run it."""
-    raw = read_alb_stream(spark, path, ignore_corrupt_files=ignore_corrupt_files)
-    parsed = parse_alb_lines(raw)
-    return add_features(parsed, eastern=eastern)
+    return add_features(parse_alb_lines(read_alb_stream(spark, path)))
 
 
 def hourly_aggregation_stream(
     df: DataFrame, ts: str = "time", watermark: str = "1 hour"
 ) -> DataFrame:
-    """Streaming twin of reports.hourly_aggregation: an event-time tumbling
-    1-hour window replaces the Eastern date-part group keys (same hourly
-    granularity; window bounds are instants, presentation-layer tz is the
-    sink's concern), and the two non-incremental aggregates take their
-    documented approx forms — exact countDistinct and exact median cannot
-    be maintained incrementally with bounded state, which is precisely why
-    hourly_aggregation(exact=False) exists (operators/reports.py).
+    """Streaming twin of reports.hourly_aggregation — the same null-geo
+    filter and nine metrics, in their approx forms (exact countDistinct and
+    exact median cannot be maintained incrementally with bounded state,
+    which is precisely why hourly_aggregation(exact=False) exists). Only the
+    group key differs: an event-time tumbling 1-hour window replaces the
+    Eastern date-part keys (same hourly granularity; window bounds are
+    instants, presentation-layer tz is the sink's concern).
 
     Append mode: a window's row is emitted once, when the watermark passes
     its end — the streaming form of the batch job's \"hour is complete\"
     contract. State is bounded by (watermark horizon / 1h) x |geo| keys."""
-    filtered = df.filter(
-        F.col("countryName").isNotNull() & F.col("city").isNotNull()
-    )
     return (
-        filtered.withWatermark(ts, watermark)
+        geo_located(df)
+        .withWatermark(ts, watermark)
         .groupBy(F.window(F.col(ts), "1 hour").alias("w"), "countryName", "city")
-        .agg(
-            F.count("client_ip").alias("request_count"),
-            F.approx_count_distinct("client_ip").alias("unique_client_ips_count"),
-            F.avg("total_processing_time_ms").alias("average_total_processing_time"),
-            F.percentile_approx("total_processing_time_ms", 0.5).alias(
-                "median_total_processing_time"
-            ),
-            F.coalesce(F.sum("sent_bytes"), F.lit(0)).alias("sum_sent_bytes"),
-            F.coalesce(F.sum("received_bytes"), F.lit(0)).alias("sum_received_bytes"),
-            F.count_if(F.col("status_code_type") == "2xx_Success").alias("count_2xx"),
-            F.count_if(F.col("status_code_type") == "4xx_ClientError").alias("count_4xx"),
-            F.count_if(F.col("status_code_type") == "5xx_ServerError").alias("count_5xx"),
-        )
+        .agg(*hourly_metrics(exact=False))
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
@@ -111,7 +69,6 @@ def stream_alb_pipeline(
     input_path: str,
     geo_cache_path: str,
     watermark: str = "1 hour",
-    ignore_corrupt_files: bool = True,
 ) -> DataFrame:
     """The reference main() flow as one streaming DAG: gz file stream ->
     parse -> geo enrichment -> features -> watermarked hourly aggregation.
@@ -123,7 +80,7 @@ def stream_alb_pipeline(
     windowed aggregation, watermark-bounded."""
     from ..operators.geo import enrich, load_geo_cache
 
-    raw = read_alb_stream(spark, input_path, ignore_corrupt_files=ignore_corrupt_files)
+    raw = read_alb_stream(spark, input_path)
     parsed = parse_alb_lines(raw)
     enriched = enrich(parsed, load_geo_cache(spark, geo_cache_path))
     featured = add_features(enriched)

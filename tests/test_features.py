@@ -64,24 +64,6 @@ def test_corrupt_gz_skipped_not_fatal(spark, tmp_path):
     assert n == len(corpus())  # every line of the good file, none of the bad
 
 
-def test_pipeline_checkpoint_materialization(spark, tmp_path):
-    """materialize='checkpoint_dir:<path>' writes the intermediate frame to
-    parquet and re-reads it for the sink fan-out (the 100 TB variant)."""
-    from advanced_elb_logs_etl_spark.plans.pipeline import PipelineConfig, run_pipeline
-
-    gz = write_gz(str(tmp_path / "alb.gz"), corpus())
-    ckpt = str(tmp_path / "ckpt")
-    config = PipelineConfig(
-        input_paths=[gz],
-        output_dir=str(tmp_path / "out"),
-        geo_cache_path=str(tmp_path / "cache.parquet"),
-        materialize=f"checkpoint_dir:{ckpt}",
-    )
-    paths = run_pipeline(spark, config, transport=None)
-    assert spark.read.parquet(ckpt).count() == 13
-    assert spark.read.parquet(paths["cleaned_logs"]).count() == 13
-
-
 def test_session_tiebreak_deterministic_on_equal_timestamps(spark):
     """ADVICE r1 pin: on duplicate (key, time) pairs the pipeline path
     (add_session_features, no explicit tiebreak) must order by a row-content

@@ -4,7 +4,6 @@ rows, duplicate keep-last, unenriched left-join rows."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from advanced_elb_logs_etl_spark.operators import geo
@@ -133,45 +132,23 @@ def test_end_to_end_fetch_and_persist(spark, tmp_path):
     assert geo.load_geo_cache(spark, cache_path).count() == 3
 
 
-# ---------------------------------------------------------------------------
-# round-5: opt-in executor-side fetch path (VERDICT r4 item 8)
-# ---------------------------------------------------------------------------
-
-
-def _make_wonderland_factory():
-    """Build a cloudpickle-by-value transport factory: deterministic fake
-    fetch (no network) with one planted API failure and one int-lat row.
-    Defined as a nested closure so executors never need to import the test
-    module."""
-    def factory():
-        def transport(ip):
-            if ip == "9.9.9.9":
-                return {"status": "fail", "message": "reserved range", "query": ip}
-            return {"status": "success", "query": ip, "country": f"Wonder-{ip}",
-                    "countryCode": "WL", "region": "W", "regionName": "W",
-                    "city": "Rabbit Hole", "lat": 35, "lon": 0.5, "isp": "Hatter",
-                    "message": None}
-        return transport
-    return factory
-
-
-def test_uncached_ips_frame_matches_driver_list(spark, tmp_path):
-    cache = geo.load_geo_cache(spark, _seed_cache(spark, tmp_path))
-    logs = _logs(spark, ["1.1.1.1", "2.2.2.2", "5.5.5.5", "4.4.4.4", None])
-    frame_ips = sorted(r.ip for r in geo.uncached_ips_frame(logs, cache).collect())
-    assert frame_ips == sorted(geo.find_uncached_ips(logs, cache))
-    # cap semantics preserved: plan-side limit, deterministic sort order
-    capped = [r.ip for r in geo.uncached_ips_frame(logs, cache, max_ips=1).collect()]
-    assert capped == ["4.4.4.4"]
-
-
-def test_executor_side_fetch_and_upsert(spark, tmp_path):
+def test_fetch_and_upsert_coerces_int_coords_and_keeps_fail_rows(spark, tmp_path):
+    """ip-api returns country-level coords as JSON ints and reports API
+    failures as rows; both must survive the upsert into the double-typed
+    cache and be persisted."""
     cache_path = _seed_cache(spark, tmp_path)
+
+    def transport(ip):
+        if ip == "9.9.9.9":
+            return {"status": "fail", "message": "reserved range", "query": ip}
+        return {"status": "success", "query": ip, "country": f"Wonder-{ip}",
+                "countryCode": "WL", "region": "W", "regionName": "W",
+                "city": "Rabbit Hole", "lat": 35, "lon": 0.5, "isp": "Hatter",
+                "message": None}
+
     logs = _logs(spark, ["1.1.1.1", "5.5.5.5", "9.9.9.9"])
     out = geo.enrich_with_geolocation(
-        spark, logs, cache_path,
-        transport_factory=_make_wonderland_factory(),
-        inter_request_delay_s=0.0,
+        spark, logs, cache_path, transport=transport, inter_request_delay_s=0.0
     )
     rows = {r.client_ip: r for r in out.collect()}
     assert rows["5.5.5.5"].countryName == "Wonder-5.5.5.5"
@@ -184,42 +161,16 @@ def test_executor_side_fetch_and_upsert(spark, tmp_path):
     assert persisted.count() == 4
 
 
-def test_executor_side_rejects_double_transport(spark, tmp_path):
-    cache_path = _seed_cache(spark, tmp_path)
-    with pytest.raises(ValueError, match="not both"):
-        geo.enrich_with_geolocation(
-            spark, _logs(spark, ["1.1.1.1"]), cache_path,
-            transport=lambda ip: {},
-            transport_factory=_make_wonderland_factory(),
-        )
-
-
-def test_distributed_fetch_single_partition_by_default(spark):
-    """The global-rate-limit contract: the fetch stage must run as ONE
-    task unless the caller opts into a keyed quota."""
-    missing = spark.createDataFrame([("8.8.8.8",), ("7.7.7.7",)], "ip string")
-    fetched = geo.fetch_geolocations_distributed(
-        missing, _make_wonderland_factory(), inter_request_delay_s=0.0
-    )
-    assert fetched.rdd.getNumPartitions() == 1
-    got = {r.query: r for r in fetched.collect()}
-    assert set(got) == {"8.8.8.8", "7.7.7.7"}
-    assert got["8.8.8.8"].country == "Wonder-8.8.8.8"
-
-
-def test_uncached_ips_frame_truncation_warns(spark, tmp_path, caplog):
-    """The distributed miss frame honors the module contract the driver
-    twin already had: capping the backlog is logged loudly, never silent
-    (ADVICE r5)."""
+def test_find_uncached_ips_truncation_warns(spark, tmp_path, caplog):
+    """Capping the miss backlog is logged loudly, never silent."""
     import logging
 
     cache = geo.load_geo_cache(spark, _seed_cache(spark, tmp_path))
     logs = _logs(spark, ["5.5.5.5", "4.4.4.4", "6.6.6.6"])
     with caplog.at_level(logging.WARNING, logger=geo.__name__):
-        capped = [r.ip for r in geo.uncached_ips_frame(logs, cache, max_ips=1).collect()]
-        assert capped == ["4.4.4.4"]
+        assert geo.find_uncached_ips(logs, cache, max_ips=1) == ["4.4.4.4"]
         assert any("more than 1 uncached IPs" in r.message for r in caplog.records)
         caplog.clear()
         # under the cap: no warning
-        geo.uncached_ips_frame(logs, cache, max_ips=100).collect()
+        geo.find_uncached_ips(logs, cache, max_ips=100)
         assert not caplog.records

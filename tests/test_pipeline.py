@@ -127,3 +127,36 @@ def test_sample_json(pipeline_out):
     lines = sample_json(df, n=3)
     assert len(lines) == 3
     assert all("client_ip" in _json.loads(l) for l in lines)
+
+
+def test_failed_sink_releases_persisted_frame(spark, tmp_path, monkeypatch):
+    """A sink that cannot be written must not leave the persisted final
+    frame cached in a long-lived session."""
+    from pyspark.storagelevel import StorageLevel
+
+    from advanced_elb_logs_etl_spark.plans import pipeline
+
+    real_build = pipeline.build_final_frame
+    built = []
+
+    def recording_build(*args, **kwargs):
+        built.append(real_build(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(pipeline, "build_final_frame", recording_build)
+
+    gz = write_gz(str(tmp_path / "alb-log-1.gz"), corpus())
+    out = tmp_path / "output"
+    out.mkdir()
+    (out / "reports").write_text("a file where the report directory goes")
+    config = PipelineConfig(
+        input_paths=[gz],
+        output_dir=str(out),
+        geo_cache_path=str(tmp_path / "geo_cache.parquet"),
+    )
+    with pytest.raises(Exception):
+        run_pipeline(spark, config)
+    # the session is shared with other tests' caches, so ask the cache
+    # manager about this pipeline's frame rather than for an empty manager
+    [final] = built
+    assert final.storageLevel == StorageLevel.NONE

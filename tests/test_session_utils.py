@@ -119,8 +119,11 @@ def test_autosize_never_lowers_deliberate_session_value(
         assert spark.conf.get("spark.sql.shuffle.partitions") == "4096"
         # deliberate low setting + bigger estimate: raising is still the
         # whole point of the sizing (the 200x window-sort spill fix)
+        # (an estimate of max(cores, 4) + 1 partitions of 128 MiB from the
+        # 100-byte file, so it exceeds 4 on any host)
         spark.conf.set("spark.sql.shuffle.partitions", "4")
-        monkeypatch.setenv("ELB_DECODE_FACTOR", str(256 * 1024 * 10))
+        wanted = max(cores, 4) + 1
+        monkeypatch.setenv("ELB_DECODE_FACTOR", str(wanted * 128 * 1024 * 1024 / 100))
         applied = autosize_for_inputs(spark, [str(f)])
         assert applied is not None and applied > 4
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(applied)

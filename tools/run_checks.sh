@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
-# One-command pre-commit gate: unit/e2e suite, driver-config oracle
-# rehearsal at sf0.01, and the sf0.1 benchmark.
+# One-command pre-commit gate: unit/e2e suite, the benchmark harness's own
+# tests, driver-config oracle rehearsal at sf0.01, and the sf0.1 benchmark.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 # Leak check (VERDICT r5 item 9): fixtures must stay free of real-vendor
@@ -34,6 +34,9 @@ fi
 # inside oracle_sim/test_oracle_parity themselves (r9 policy).
 python tools/oracle_sim.py --type-gate-only
 python -m pytest tests/ -x -q
+# The benchmark harness imports program functions by name; a change that
+# breaks it should fail here, not at benchmark time.
+python -m pytest perfbench -q
 SPARK_GRAFT_ORACLE_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
 python tools/plan_lint.py
 python bench.py 2>/dev/null | tail -1
